@@ -12,8 +12,9 @@ Public modules
 --------------
 - ``rules.contract``     — the 17-rule validation contract as Column factories
 - ``functions.scrub``    — PII / toxicity scrubbing (JVM regexp_replace chain)
-- ``functions.langid``   — broadcast char-n-gram language ID (Arrow pandas UDF)
-- ``functions.perplexity`` — broadcast byte-n-gram LM perplexity (Arrow pandas UDF)
+- ``functions.langid``   — broadcast char-n-gram language ID model
+- ``functions.perplexity`` — broadcast byte-n-gram LM perplexity, and the
+  fused scorer (langid + perplexity + word stats in one Arrow pandas UDF)
 - ``functions.heuristics`` — vectorized quality heuristics (pure Column exprs)
 - ``ops.dedup``          — exact / MinHash-LSH / SimHash / n-gram-Jaccard
   dedup + benchmark decontamination

@@ -164,7 +164,6 @@ class FilterConfig:
     # pipeline: the rollup window rides the bucket partitioning
     # (bucket is a pure function of conv_id).
     conv_min_keep_frac: float = 0.0
-    scrub_pii: bool = True
     toxicity_lexicon: tuple[str, ...] = (
         "frakking", "dagnabbit", "gorram", "smeghead",  # synthetic lexicon
     )

@@ -22,6 +22,8 @@ from pyspark.sql import types as T
 
 from ..synth import LANG_VOCAB
 from . import ngram
+from .langid import _TABLE as LANG_TABLE
+from .langid import score_from_buffer
 
 NGRAM = 4
 _ALPHA = 0.1
@@ -86,27 +88,12 @@ def train_table_distributed(df, text_col: str = "text") -> np.ndarray:
 _TABLE = _train_table()
 
 
-def ppl_batch(texts: pd.Series, table: np.ndarray) -> pd.Series:
-    buf, offsets, lengths = ngram.encode_batch(texts.tolist())
-    return ppl_from_buffer(buf, offsets, table)
-
-
 def ppl_from_buffer(buf, offsets, table: np.ndarray) -> pd.Series:
     sums, counts = ngram.rowwise_ngram_stats(buf, offsets, NGRAM, table)
     ppl = np.full(len(offsets), PPL_UNSCORABLE, dtype=np.float64)
     scorable = counts > 0
     ppl[scorable] = np.exp(-sums[scorable] / counts[scorable])
     return pd.Series(ppl)
-
-
-def make_ppl_udf(spark: SparkSession, table: np.ndarray | None = None):
-    bc = spark.sparkContext.broadcast(_TABLE if table is None else table)
-
-    @F.pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series) -> pd.Series:
-        return ppl_batch(texts, bc.value)
-
-    return ppl_udf
 
 
 # --- fused scorer: one Arrow transfer, one UTF-8 encode pass --------------
@@ -121,28 +108,36 @@ _FUSED_TYPE = T.StructType([
 ])
 
 
-def make_scorer_udf(spark: SparkSession, ppl_table: np.ndarray | None = None):
-    """Single pandas UDF returning struct<lang, lang_conf, ppl, n_words,
-    repetition_ratio> — the text crosses the JVM↔Arrow boundary once per
-    batch and is UTF-8-encoded once per batch.  ``ppl_table`` overrides
-    the import-time hermetic model with a corpus-trained one
-    (``train_table_distributed``)."""
-    from . import ngram
-    from .langid import _TABLE as LANG_TABLE
-    from .langid import score_from_buffer
+def score_texts(
+    texts: pd.Series,
+    lang_table: np.ndarray = LANG_TABLE,
+    ppl_table: np.ndarray = _TABLE,
+) -> pd.DataFrame:
+    """The fused scorer on one batch of texts → DataFrame(lang, lang_conf,
+    ppl, n_words, repetition_ratio); a null text scores like an empty one
+    (``und``, ``PPL_UNSCORABLE``, no words)."""
+    buf, offsets, lengths = ngram.encode_batch(texts.tolist())
+    out = score_from_buffer(buf, offsets, lengths, lang_table)
+    out["ppl"] = ppl_from_buffer(buf, offsets, ppl_table)
+    n_words, n_distinct = ngram.rowwise_word_stats(buf, offsets)
+    out["n_words"] = n_words.astype("int32")
+    out["repetition_ratio"] = np.where(
+        n_words > 0, 1.0 - n_distinct / np.maximum(n_words, 1), 0.0
+    )
+    return out
 
+
+def make_scorer_udf(spark: SparkSession, ppl_table: np.ndarray | None = None):
+    """Single pandas UDF running ``score_texts`` on every Arrow batch — the
+    text crosses the JVM↔Arrow boundary once per batch and is
+    UTF-8-encoded once per batch.  ``ppl_table`` overrides the import-time
+    hermetic model with a corpus-trained one
+    (``train_table_distributed``)."""
     bc_lang = spark.sparkContext.broadcast(LANG_TABLE)
     bc_ppl = spark.sparkContext.broadcast(_TABLE if ppl_table is None else ppl_table)
 
     @F.pandas_udf(_FUSED_TYPE)
     def scorer_udf(texts: pd.Series) -> pd.DataFrame:
-        buf, offsets, lengths = ngram.encode_batch(texts.tolist())
-        out = score_from_buffer(buf, offsets, lengths, bc_lang.value)
-        out["ppl"] = ppl_from_buffer(buf, offsets, bc_ppl.value)
-        n_words, n_distinct = ngram.rowwise_word_stats(buf, offsets)
-        out["n_words"] = n_words.astype("int32")
-        rep = np.where(n_words > 0, 1.0 - n_distinct / np.maximum(n_words, 1), 0.0)
-        out["repetition_ratio"] = rep
-        return out
+        return score_texts(texts, bc_lang.value, bc_ppl.value)
 
     return scorer_udf

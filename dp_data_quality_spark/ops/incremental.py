@@ -193,18 +193,14 @@ def incremental_dedup(
     # commit survivors' signatures into this batch's index partition
     survivors = sigs.join(drop_ids.withColumnRenamed(id_col, "doc_id"),
                           on="doc_id", how="left_anti")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn("batch_id", F.lit(batch_id))
-            .repartition("batch_id")
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(index_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        survivors.withColumn("batch_id", F.lit(batch_id))
+        .repartition("batch_id")
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(index_path)
+    )
     sigs.unpersist()  # everything downstream is materialized by now
 
     return IncrementalDedupResult(

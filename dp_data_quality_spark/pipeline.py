@@ -55,12 +55,18 @@ NULL_REASON = "null_text"
 LANG_REASON = "lang_mismatch"
 PPL_REASON = "high_perplexity"
 
+# Columns of the scored sink, batch and streaming alike.  keep is written
+# as int so the partition column's type survives a re-read.
+SINK_COLUMNS = (
+    "keep", "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
+    "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
+)
+
 
 def score_turns(
     df: DataFrame,
     spark: SparkSession,
     cfg: FilterConfig | None = None,
-    text_col: str = "text",
     ppl_table=None,
 ) -> DataFrame:
     """Add lang, lang_conf, ppl, heuristic columns, drop_reasons, keep and
@@ -69,27 +75,18 @@ def score_turns(
     from ``functions.perplexity.train_table_distributed``)."""
     cfg = cfg or FilterConfig()
     scorer = make_scorer_udf(spark, ppl_table=ppl_table)
+    text = F.col("text")
+    prefix = (
+        F.substring(text, 1, cfg.score_prefix_chars) if cfg.score_prefix_chars else text
+    )
 
     # UDF first, heuristics second: every non-UDF column is buffered
     # JVM-side while batches round-trip through Python, so the Arrow
     # stage should see the narrowest possible row (original columns
     # only, none of the derived heuristic columns).
-    score_input = (
-        F.substring(F.col(text_col), 1, cfg.score_prefix_chars)
-        if cfg.score_prefix_chars
-        else F.col(text_col)
-    )
-    df = df.withColumn("__score", scorer(score_input)).select(
-        "*",
-        F.col("__score.lang").alias("lang"),
-        F.col("__score.lang_conf").alias("lang_conf"),
-        F.col("__score.ppl").alias("ppl"),
-        F.col("__score.n_words").alias("n_words"),
-        F.col("__score.repetition_ratio").alias("repetition_ratio"),
-    ).drop("__score")
-    df = H.add_heuristic_columns(df, text_col, cfg, include_word_stats=False)
+    df = df.withColumn("__score", scorer(prefix)).select("*", "__score.*").drop("__score")
+    df = H.add_heuristic_columns(df, prefix, cfg)
 
-    text = F.col(text_col)
     lang_ok = F.col("lang").isin(*cfg.expected_langs) & (
         F.col("lang_conf") >= cfg.lang_conf_min
     )
@@ -103,7 +100,7 @@ def score_turns(
 
     df = df.withColumn("drop_reasons", F.array_compact(F.array(*reason_exprs)))
     df = df.withColumn("keep", F.size("drop_reasons") == 0)
-    scrubbed = scrub_text(text, cfg.toxicity_lexicon if cfg.scrub_pii else ())
+    scrubbed = scrub_text(text, cfg.toxicity_lexicon)
     df = df.withColumn("scrubbed_text", F.when(F.col("keep"), scrubbed))
     return df
 
@@ -152,7 +149,6 @@ def run_pipeline(
     run_id: str = "run-0",
     resume: bool = True,
     snapshot_id: str | None = None,
-    ppl_table=None,
 ) -> PipelineResult:
     """Score + filter + scrub ``input_df`` (input_hint schema), writing:
 
@@ -199,10 +195,12 @@ def run_pipeline(
     # no longer depends on input file layout (a compact parquet would
     # otherwise serialize the pandas-UDF stage onto 1-2 scan partitions);
     # (b) data arrives at the sink already partitioned by bucket, so the
-    # write needs no second shuffle.
+    # write needs no second shuffle.  AQE never coalesces an explicit-count
+    # repartition (REPARTITION_BY_NUM), so the bucket count stays the
+    # scoring parallelism (plan-asserted in tests).
     df = df.repartition(n_buckets, "bucket")
 
-    scored = score_turns(df, spark, cfg, ppl_table=ppl_table)
+    scored = score_turns(df, spark, cfg)
 
     if cfg.conv_min_keep_frac > 0:
         # Conversation-level demotion costs exactly ONE extra shuffle,
@@ -229,30 +227,15 @@ def run_pipeline(
             "scrubbed_text", F.when(F.col("keep"), F.col("scrubbed_text"))
         )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # AQE partition coalescing can fold the 64-bucket shuffle into a
-    # handful of post-shuffle partitions at small scale, serializing the
-    # pandas-UDF scoring stage (observed 2-3× wall-time regressions on
-    # local[32]).  The bucket count IS the intended parallelism unit here;
-    # at 100 TB each bucket far exceeds the advisory size and coalescing
-    # would be a no-op anyway — disable it for this job.
-    old_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    out_cols = [
-        F.col("keep").cast("int").alias("keep"),  # int: partition-col type survives re-read
-        "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
-        "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
-    ]
-    try:
-        (
-            scored.select(*out_cols)
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.partitionBy("keep", "bucket")
-            .mode("overwrite")
-            .parquet(scored_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coalesce)
+    (
+        scored.withColumn("keep", F.col("keep").cast("int"))
+        .select(*SINK_COLUMNS)
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.partitionBy("keep", "bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(scored_path)
+    )
 
     # lineage metrics from the committed output: pruned columnar scan of
     # (keep, bucket, drop_reasons) only — the text columns are never read.

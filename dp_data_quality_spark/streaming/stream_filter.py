@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from ..pipeline import score_turns, with_bucket
+from ..pipeline import SINK_COLUMNS, score_turns, with_bucket
 
 
 def score_stream(
@@ -58,13 +58,9 @@ def filtered_writer(output_dir: str):
     exactly-once per epoch."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        out_cols = [
-            F.col("keep").cast("int").alias("keep"),
-            "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
-            "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
-        ]
         (
-            batch_df.select(*out_cols)
+            batch_df.withColumn("keep", F.col("keep").cast("int"))
+            .select(*SINK_COLUMNS)
             .withColumn("run_id", F.lit(f"stream-{batch_id}"))
             .write.partitionBy("run_id", "keep", "bucket")
             .option("partitionOverwriteMode", "dynamic")

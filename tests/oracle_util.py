@@ -12,10 +12,7 @@ import re
 import pandas as pd
 
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.functions.langid import _TABLE as LANG_TABLE
-from dp_data_quality_spark.functions.langid import score_batch
-from dp_data_quality_spark.functions.perplexity import _TABLE as PPL_TABLE
-from dp_data_quality_spark.functions.perplexity import ppl_batch
+from dp_data_quality_spark.functions.perplexity import score_texts
 from dp_data_quality_spark.rules import regexes as rx
 
 _SCRUB = [
@@ -45,9 +42,11 @@ def decide_oracle(text: str | None, cfg: FilterConfig) -> tuple[bool, list[str],
         return False, ["null_text"], None
 
     scored_text = text[: cfg.score_prefix_chars] if cfg.score_prefix_chars else text
-    lang_df = score_batch(pd.Series([scored_text]), LANG_TABLE)
-    lang, conf = lang_df.lang[0], float(lang_df.lang_conf[0])
-    ppl = float(ppl_batch(pd.Series([scored_text]), PPL_TABLE)[0])
+    # langid + perplexity from the engine's scorer kernels; the word stats
+    # it also returns are reimplemented independently below.
+    scores = score_texts(pd.Series([scored_text]))
+    lang, conf = scores.lang[0], float(scores.lang_conf[0])
+    ppl = float(scores.ppl[0])
 
     if not (lang in cfg.expected_langs and conf >= cfg.lang_conf_min):
         reasons.append("lang_mismatch")

@@ -5,13 +5,15 @@ checkpoint-resume, and stable output ordering under input perturbation.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.pipeline import run_pipeline, score_turns, with_bucket
+from dp_data_quality_spark.pipeline import SINK_COLUMNS, run_pipeline, score_turns, with_bucket
 
 from .oracle_util import decide_oracle, f1
 
@@ -277,3 +279,47 @@ def test_conversation_rollup_costs_exactly_one_extra_exchange(spark, transcripts
         return scored._jdf.queryExecution().executedPlan().toString()
 
     assert plan_for(True).count("Exchange") == plan_for(False).count("Exchange") + 1
+
+
+def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path):
+    # dynamic partition overwrite is a writer option, not a session
+    # setting: a later overwrite by the caller must keep static semantics
+    keys = ["spark.sql.sources.partitionOverwriteMode",
+            "spark.sql.adaptive.coalescePartitions.enabled"]
+    before = {k: spark.conf.get(k) for k in keys}
+    run_pipeline(spark, transcripts, str(tmp_path / "out"), cfg=CFG, n_buckets=4)
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_bucket_shuffle_is_never_coalesced_by_aqe(spark, transcripts):
+    # the explicit-count bucket repartition keeps n_buckets partitions in
+    # the final adaptive plan with coalescing on, so run_pipeline needs no
+    # AQE toggle; a groupBy shuffle in the same session is coalesced
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        scored = score_turns(
+            with_bucket(transcripts, 8).repartition(8, "bucket"), spark, CFG)
+        sink = (scored.withColumn("keep", F.col("keep").cast("int"))
+                .select(*SINK_COLUMNS)
+                .sortWithinPartitions("conv_id", "turn_idx"))
+        sink.collect()
+        plan = sink._jdf.queryExecution().executedPlan().toString()
+        grouped = transcripts.groupBy("conv_id").count()
+        grouped.collect()
+        control = grouped._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, saved)
+    assert "isFinalPlan=true" in plan, plan
+    assert re.search(r"hashpartitioning\(bucket#\d+, 8\), REPARTITION_BY_NUM", plan), plan
+    assert "AQEShuffleRead" not in plan, plan
+    assert "AQEShuffleRead coalesced" in control, control
+
+
+def test_score_turns_plan_has_one_scorer_and_no_jvm_word_split(spark, transcripts):
+    for cfg in (CFG, FilterConfig(score_prefix_chars=0)):
+        scored = score_turns(transcripts, spark, cfg)
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "split(" not in plan, plan

@@ -1,5 +1,5 @@
-"""Unit tests for the scrub chain (byte-exact golden strings), the langid
-scorer and the perplexity scorer."""
+"""Unit tests for the scrub chain (byte-exact golden strings) and the
+fused langid + perplexity scorer."""
 
 from __future__ import annotations
 
@@ -7,13 +7,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.functions.langid import _TABLE as LT
-from dp_data_quality_spark.functions.langid import make_langid_udf, score_batch
 from dp_data_quality_spark.functions.perplexity import (
     PPL_UNSCORABLE,
-    _TABLE as PT,
-    make_ppl_udf,
-    ppl_batch,
+    make_scorer_udf,
+    score_texts,
 )
 from dp_data_quality_spark.functions.scrub import scrub_text
 
@@ -52,28 +49,28 @@ def test_scrub_null_passthrough(spark):
 
 
 def test_langid_discriminates():
-    out = score_batch(pd.Series([
+    out = score_texts(pd.Series([
         "the quick brown fox jumps over the lazy dog near the quiet valley",
         "le renard brun saute par dessus la vallée tranquille du matin",
         "der schnelle braune fuchs springt über das stille tal am morgen",
         "el zorro marrón salta sobre el valle tranquilo de la mañana",
-    ]), LT)
+    ]))
     assert list(out.lang) == ["en", "fr", "de", "es"]
     assert (out.lang_conf > 0.9).all()
 
 
 def test_langid_und_for_tiny_or_null():
-    out = score_batch(pd.Series(["", None, "ab"]), LT)
+    out = score_texts(pd.Series(["", None, "ab"]))
     assert list(out.lang) == ["und"] * 3
     assert (out.lang_conf == 0.0).all()
 
 
 def test_ppl_ordering():
-    ppl = ppl_batch(pd.Series([
+    ppl = score_texts(pd.Series([
         "the quick brown fox jumps over the lazy dog",   # fluent in-domain
         "@#$%^&*! @#$%^&*! zzqx jkwv",                    # gibberish
         "",                                               # unscorable
-    ]), PT)
+    ])).ppl
     assert ppl[0] < ppl[1]
     assert ppl[2] == PPL_UNSCORABLE
 
@@ -82,10 +79,8 @@ def test_udfs_run_in_spark(spark):
     df = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",), (None,)], ["text"]
     )
-    lang_udf = make_langid_udf(spark)
-    ppl_udf = make_ppl_udf(spark)
-    rows = df.select(
-        lang_udf("text").alias("l"), ppl_udf("text").alias("p")
-    ).collect()
-    assert rows[0].l.lang == "en" and rows[0].p < PPL_UNSCORABLE
-    assert rows[1].l.lang == "und" and rows[1].p == PPL_UNSCORABLE
+    rows = df.select(make_scorer_udf(spark)("text").alias("s")).collect()
+    assert rows[0].s.lang == "en" and rows[0].s.ppl < PPL_UNSCORABLE
+    assert rows[0].s.n_words == 9
+    assert rows[1].s.lang == "und" and rows[1].s.ppl == PPL_UNSCORABLE
+    assert rows[1].s.n_words == 0 and rows[1].s.repetition_ratio == 0.0
