@@ -9,8 +9,8 @@ uses, sized for a sandbox.
 Scoring runs inside the fused scorer UDF (``perplexity.make_scorer_udf``)
 on the batch's NUL-concatenated byte buffer: bucket gathers and
 ``np.add.reduceat`` produce per-row per-language log-likelihoods — zero
-per-row Python.  The (L × 65536) float32 table is shipped to executors
-once via ``SparkContext.broadcast``.
+per-row Python.  The (L × 65536) float32 table is built at import, on
+the driver and in each Python worker alike, so it is never shipped.
 """
 
 from __future__ import annotations

@@ -108,16 +108,12 @@ _FUSED_TYPE = T.StructType([
 ])
 
 
-def score_texts(
-    texts: pd.Series,
-    lang_table: np.ndarray = LANG_TABLE,
-    ppl_table: np.ndarray = _TABLE,
-) -> pd.DataFrame:
+def score_texts(texts: pd.Series, ppl_table: np.ndarray = _TABLE) -> pd.DataFrame:
     """The fused scorer on one batch of texts → DataFrame(lang, lang_conf,
     ppl, n_words, repetition_ratio); a null text scores like an empty one
     (``und``, ``PPL_UNSCORABLE``, no words)."""
     buf, offsets, lengths = ngram.encode_batch(texts.tolist())
-    out = score_from_buffer(buf, offsets, lengths, lang_table)
+    out = score_from_buffer(buf, offsets, lengths, LANG_TABLE)
     out["ppl"] = ppl_from_buffer(buf, offsets, ppl_table)
     n_words, n_distinct = ngram.rowwise_word_stats(buf, offsets)
     out["n_words"] = n_words.astype("int32")
@@ -133,11 +129,10 @@ def make_scorer_udf(spark: SparkSession, ppl_table: np.ndarray | None = None):
     UTF-8-encoded once per batch.  ``ppl_table`` overrides the import-time
     hermetic model with a corpus-trained one
     (``train_table_distributed``)."""
-    bc_lang = spark.sparkContext.broadcast(LANG_TABLE)
     bc_ppl = spark.sparkContext.broadcast(_TABLE if ppl_table is None else ppl_table)
 
     @F.pandas_udf(_FUSED_TYPE)
     def scorer_udf(texts: pd.Series) -> pd.DataFrame:
-        return score_texts(texts, bc_lang.value, bc_ppl.value)
+        return score_texts(texts, ppl_table=bc_ppl.value)
 
     return scorer_udf

@@ -55,12 +55,15 @@ NULL_REASON = "null_text"
 LANG_REASON = "lang_mismatch"
 PPL_REASON = "high_perplexity"
 
-# Columns of the scored sink, batch and streaming alike.  keep is written
-# as int so the partition column's type survives a re-read.
-SINK_COLUMNS = (
-    "keep", "bucket", "conv_id", "turn_idx", "role", "tool", "ts",
-    "lang", "lang_conf", "ppl", "scrubbed_text", "drop_reasons",
-)
+
+def sink_frame(scored: DataFrame) -> DataFrame:
+    """The scored sink's columns, batch and streaming alike.  keep is
+    written as int so the partition column's type survives a re-read."""
+    return scored.select(
+        F.col("keep").cast("int").alias("keep"), "bucket", "conv_id", "turn_idx",
+        "role", "tool", "ts", "lang", "lang_conf", "ppl", "scrubbed_text",
+        "drop_reasons",
+    )
 
 
 def score_turns(
@@ -228,8 +231,7 @@ def run_pipeline(
         )
 
     (
-        scored.withColumn("keep", F.col("keep").cast("int"))
-        .select(*SINK_COLUMNS)
+        sink_frame(scored)
         .sortWithinPartitions("conv_id", "turn_idx")
         .write.partitionBy("keep", "bucket")
         .option("partitionOverwriteMode", "dynamic")

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from ..pipeline import SINK_COLUMNS, score_turns, with_bucket
+from ..pipeline import score_turns, sink_frame, with_bucket
 
 
 def score_stream(
@@ -59,8 +59,7 @@ def filtered_writer(output_dir: str):
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("keep", F.col("keep").cast("int"))
-            .select(*SINK_COLUMNS)
+            sink_frame(batch_df)
             .withColumn("run_id", F.lit(f"stream-{batch_id}"))
             .write.partitionBy("run_id", "keep", "bucket")
             .option("partitionOverwriteMode", "dynamic")

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from dp_data_quality_spark import synth
 from dp_data_quality_spark.config import FilterConfig
-from dp_data_quality_spark.pipeline import SINK_COLUMNS, run_pipeline, score_turns, with_bucket
+from dp_data_quality_spark.pipeline import run_pipeline, score_turns, with_bucket
 
 from .oracle_util import decide_oracle, f1
 
@@ -291,30 +291,41 @@ def test_run_pipeline_leaves_session_conf_unchanged(spark, transcripts, tmp_path
     assert {k: spark.conf.get(k) for k in keys} == before
 
 
-def test_bucket_shuffle_is_never_coalesced_by_aqe(spark, transcripts):
-    # the explicit-count bucket repartition keeps n_buckets partitions in
-    # the final adaptive plan with coalescing on, so run_pipeline needs no
-    # AQE toggle; a groupBy shuffle in the same session is coalesced
+def _executions(spark) -> dict[int, str]:
+    """SQL execution id -> physical plan, read from the status store,
+    where AQE leaves each execution's final plan."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[e.executionId()] = e.physicalPlanDescription()
+    return out
+
+
+@pytest.mark.parametrize("rollup", [0.0, 0.6], ids=["plain", "rollup"])
+def test_bucket_shuffle_is_never_coalesced_by_aqe(spark, transcripts, tmp_path, rollup):
+    # run_pipeline's bucket shuffles are explicit-count repartitions, which
+    # keep n_buckets partitions in the final adaptive plan with coalescing
+    # on, so the pipeline needs no AQE toggle; a by-column repartition
+    # would be coalesced and serialize the scoring stage
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     saved = spark.conf.get(key)
     spark.conf.set(key, "true")
     try:
-        scored = score_turns(
-            with_bucket(transcripts, 8).repartition(8, "bucket"), spark, CFG)
-        sink = (scored.withColumn("keep", F.col("keep").cast("int"))
-                .select(*SINK_COLUMNS)
-                .sortWithinPartitions("conv_id", "turn_idx"))
-        sink.collect()
-        plan = sink._jdf.queryExecution().executedPlan().toString()
-        grouped = transcripts.groupBy("conv_id").count()
-        grouped.collect()
-        control = grouped._jdf.queryExecution().executedPlan().toString()
+        before = set(_executions(spark))
+        run_pipeline(spark, transcripts, str(tmp_path / "out"),
+                     cfg=FilterConfig(conv_min_keep_frac=rollup), n_buckets=8)
+        plans = [p for i, p in _executions(spark).items() if i not in before]
     finally:
         spark.conf.set(key, saved)
-    assert "isFinalPlan=true" in plan, plan
-    assert re.search(r"hashpartitioning\(bucket#\d+, 8\), REPARTITION_BY_NUM", plan), plan
-    assert "AQEShuffleRead" not in plan, plan
-    assert "AQEShuffleRead coalesced" in control, control
+    [plan] = [p for p in plans if "ArrowEvalPython" in p and "WriteFiles" in p]
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert "AQEShuffleRead" not in final, plan
+    exchanges = re.findall(r"hashpartitioning\(bucket#\d+, (\d+)\), (\w+)", plan)
+    assert exchanges and set(exchanges) == {("8", "REPARTITION_BY_NUM")}, plan
+    # the metrics aggregation in the same run is coalesced: the check is live
+    assert any("AQEShuffleRead" in p for p in plans), plans
 
 
 def test_score_turns_plan_has_one_scorer_and_no_jvm_word_split(spark, transcripts):
